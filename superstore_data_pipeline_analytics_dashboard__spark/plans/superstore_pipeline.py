@@ -21,11 +21,17 @@ Reference: SQLproject1.sql (cited per stage). Deviations, all documented:
 Scale: dims are tiny → broadcast everywhere; the fact build is one pass
 over staging with 6 broadcast joins (single shuffle for the line-number
 window, partitioned by OrderID). At 100 TB the fact write should be
-partitioned by order-date month (write_star does this).
+partitioned by order-date month (write_star does this). Dashboard slices
+never rescan staging: they re-aggregate a cached pivot cube whose size is
+(Region, Segment) cells × pivot rows, independent of the fact volume.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -458,59 +464,92 @@ def v_suspicious_discounts(fact: DataFrame) -> DataFrame:
 
 # -------------------------------------------------------------- dashboard
 
-def pivot_by_category(stg_or_table: DataFrame) -> DataFrame:
-    """PivotTable1 "By Category" (A8): count of Sales, count of Profit,
-    sum of Quantity, with rollup grand total."""
-    # grouping() discriminates the rollup total from a genuine NULL
-    # Category base group (coalesce alone would conflate them)
+#: the three pivot measures, additive across (Region, Segment) cells
+_MEASURES = ("CountOfSales", "CountOfProfit", "SumOfQuantity")
+
+
+def _pivot_cube(stg_or_table: DataFrame) -> DataFrame:
+    """The pivot cache of the workbook's two PivotTables (A8, A9) at
+    (Region, Segment) grain: per cell, the category rows plus
+    "Grand Total", and the year-month rows plus year subtotals, with
+    the three measures already aggregated.
+
+    Labels are applied here, once: a NULL Category reads "(null)", a
+    NULL OrderDate reads -2 in OrderYear and OrderMonth, a subtotal
+    position reads -1. A category row has NULL OrderYear, a year-month
+    row NULL Category; the (-1, -1) row is both pivots' total and
+    carries "Grand Total". Each source row is emitted once per pivot
+    row it falls in (four) and the copies aggregate in one pass, so
+    its size is cells × (categories + months + years + 1), independent
+    of the fact volume. ``coalesce(1)``: a cached copy reports
+    ``SinglePartition``, so a slice's ``groupBy`` needs no Exchange.
+    A literal "(null)"/"Grand Total" Category merges with the label."""
+    y, m = F.year("OrderDate"), F.month("OrderDate")
+    no_cat, no_ym = F.lit(None).cast("string"), F.lit(None).cast("int")
+
+    def row(cat, year, month):
+        return F.struct(cat.alias("Category"), year.alias("OrderYear"),
+                        month.alias("OrderMonth"))
+
+    rows = F.array(
+        row(F.coalesce("Category", F.lit("(null)")), no_ym, no_ym),
+        row(no_cat, F.coalesce(y, F.lit(-2)), F.coalesce(m, F.lit(-2))),
+        row(no_cat, F.coalesce(y, F.lit(-2)), F.lit(-1)),
+        row(F.lit("Grand Total"), F.lit(-1), F.lit(-1)),
+    )
     return (
-        stg_or_table.rollup("Category")
+        stg_or_table.select("Region", "Segment", "Sales", "Profit", "Quantity",
+                            F.inline(rows))
+        .groupBy("Region", "Segment", "Category", "OrderYear", "OrderMonth")
         .agg(
             F.count("Sales").alias("CountOfSales"),
             F.count("Profit").alias("CountOfProfit"),
             F.sum("Quantity").alias("SumOfQuantity"),
-            F.grouping("Category").alias("__g"),
         )
-        .select(
-            F.when(F.col("__g") == 1, F.lit("Grand Total"))
-            .otherwise(F.coalesce("Category", F.lit("(null)")))
-            .alias("Category"),
-            "CountOfSales",
-            "CountOfProfit",
-            "SumOfQuantity",
-        )
+        .coalesce(1)
     )
+
+
+def _sql_in(col: str, values: list) -> str:
+    """``col IN (...)`` over quoted string literals (NULL for None)."""
+    def lit(v):
+        if v is None:
+            return "NULL"
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    return f"{col} IN ({', '.join(lit(v) for v in values)})"
+
+
+def _slice(
+    cube: DataFrame,
+    labels: list[str],
+    regions: list[str] | None = None,
+    segments: list[str] | None = None,
+) -> DataFrame:
+    """One pivot over the selected cells: a filter and a sum per label.
+    Empty or None slicers select every cell (NULL Region/Segment
+    included), as an unfiltered PivotTable does. The predicate and the
+    sums are SQL text: one py4j call each instead of one per Column
+    node, which is most of a slice's driver time."""
+    keep = [f"{labels[0]} IS NOT NULL"]
+    if regions:
+        keep.append(_sql_in("Region", regions))
+    if segments:
+        keep.append(_sql_in("Segment", segments))
+    return cube.filter(" AND ".join(keep)).groupBy(*labels).agg(
+        *(F.expr(f"sum({c}) AS {c}") for c in _MEASURES))
+
+
+def pivot_by_category(stg_or_table: DataFrame) -> DataFrame:
+    """PivotTable1 "By Category" (A8): count of Sales, count of Profit,
+    sum of Quantity, with a "Grand Total" row."""
+    return _slice(_pivot_cube(stg_or_table), ["Category"])
 
 
 def pivot_by_year_month(stg_or_table: DataFrame) -> DataFrame:
     """PivotTable2 "By Year/Month" (A9): year→month rollup of the same
     three measures."""
-    df = stg_or_table.withColumn("OrderYear", F.year("OrderDate")).withColumn(
-        "OrderMonth", F.month("OrderDate")
-    )
-    # grouping() discriminates subtotal rows from genuine NULL-date base
-    # groups (qa_issues anticipates NULL OrderDate rows)
-    return (
-        df.rollup("OrderYear", "OrderMonth")
-        .agg(
-            F.count("Sales").alias("CountOfSales"),
-            F.count("Profit").alias("CountOfProfit"),
-            F.sum("Quantity").alias("SumOfQuantity"),
-            F.grouping("OrderYear").alias("__gy"),
-            F.grouping("OrderMonth").alias("__gm"),
-        )
-        .select(
-            F.when(F.col("__gy") == 1, F.lit(-1))
-            .otherwise(F.coalesce("OrderYear", F.lit(-2)))
-            .alias("OrderYear"),
-            F.when(F.col("__gm") == 1, F.lit(-1))
-            .otherwise(F.coalesce("OrderMonth", F.lit(-2)))
-            .alias("OrderMonth"),
-            "CountOfSales",
-            "CountOfProfit",
-            "SumOfQuantity",
-        )
-    )
+    return _slice(_pivot_cube(stg_or_table), ["OrderYear", "OrderMonth"])
 
 
 def excel_compat_table(spark: SparkSession, csv_path: str) -> DataFrame:
@@ -531,23 +570,37 @@ def excel_compat_table(spark: SparkSession, csv_path: str) -> DataFrame:
     )
 
 
+#: staged frame → its cached pivot cube; an entry lives as long as its frame
+_CUBES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: one build per frame when dashboard threads race on a cold or dropped cube
+_CUBES_LOCK = threading.Lock()
+
+
+def _cached_cube(stg: DataFrame) -> DataFrame:
+    """``stg``'s pivot cube, cached on first use and rebuilt once the
+    CacheManager no longer holds it (``spark.catalog.clearCache()``,
+    an unpersist)."""
+    with _CUBES_LOCK:
+        cube = _CUBES.get(stg)
+        if cube is None or cube.storageLevel == StorageLevel.NONE:
+            cube = _CUBES[stg] = _pivot_cube(stg).cache()
+    return cube
+
+
 def dashboard_superstore(
     layers: dict[str, DataFrame],
     regions: list[str] | None = None,
     segments: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Entry point 3 (SURVEY.md §3.3): the slicer-filtered dashboard.
-    Region + Segment slicers (A11) filter the staged table before both
-    pivot aggregates recompute — exactly the pivot-cache dataflow, with
-    `layers['stg']` cached as the pivot-cache analog."""
-    t = layers["stg"]
-    if regions:
-        t = t.filter(F.col("Region").isin(regions))
-    if segments:
-        t = t.filter(F.col("Segment").isin(segments))
+    Region + Segment slicers (A11) select cells of one cached pivot cube
+    built from ``layers['stg']`` (the workbook's pivot cache), and both
+    pivots re-aggregate those cells: two single-stage jobs per slice,
+    no rescan of the staged table."""
+    cube = _cached_cube(layers["stg"])
     return {
-        "by_category": pivot_by_category(t),
-        "by_year_month": pivot_by_year_month(t),
+        "by_category": _slice(cube, ["Category"], regions, segments),
+        "by_year_month": _slice(cube, ["OrderYear", "OrderMonth"], regions, segments),
     }
 
 

@@ -213,7 +213,15 @@ def collect_batch_blooms(
     approximate NDV (one extra narrow scan; formula in the module
     docstring) — the safe default for callers who skip the sizing
     paragraph. Pass an explicit power of two to pin geometry across
-    rebuilds."""
+    rebuilds.
+
+    Refreshing a CACHED summary frame after an append: unpersist the
+    old frame BEFORE caching the new one. The re-read of the same path
+    has ``sameResult`` with the cached one, so ``.cache()`` on the new
+    frame is a no-op and the CacheManager serves it from the old entry
+    — summaries of the pre-append batches only; unpersisting the old
+    frame afterwards drops that shared entry, leaving the new frame
+    uncached."""
     cols = [col] if isinstance(col, str) else list(col)
     src = spark.read.option("basePath", sink_path).parquet(sink_path)
     bits: dict[str, int] | int

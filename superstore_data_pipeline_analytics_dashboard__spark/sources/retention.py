@@ -293,7 +293,9 @@ def erase_rows(
     deletion stays safe (over-approximation survives row removal; in
     particular this erasure does not invalidate it), but one built
     before an APPEND can hide the appended rows — for a compliance
-    delete, pass no bloom rather than a possibly-stale one.
+    delete, pass no bloom rather than a possibly-stale one. The one
+    staleness detected here is a whole new batch: an envelope-admitted
+    batch with no summary row is kept affected, never pruned.
 
     ``bloom_store_path`` (optional) keeps an on-disk Bloom store
     CURRENT through the delete: after the swap, the rewritten batches'
@@ -306,6 +308,11 @@ def erase_rows(
     hide rows) but no longer CURRENT, which ``bloom_store_audit``
     reports as count mismatches / orphan rows."""
     cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    bad = sorted(set(blooms or ()) - set(cols))
+    if bad:
+        raise ValueError(
+            f"erase_rows: bloom provided for non-key column(s) {bad}"
+        )
     if bloom_store_path is not None:
         # validate BEFORE any irreversible file work: a mistyped path,
         # an inconsistent store, or a store-recorded column the sink no
@@ -465,8 +472,23 @@ def erase_rows(
                 F.col("n_rows").cast("long").alias("n_rows"),
             )
         )
-        .collect()
     )
+    # with blooms, the batches each summary frame covers ride along
+    # (tag 3, the key column in ``file``): the bloom intersection below
+    # must not prune an envelope candidate they do not cover
+    for c, bl in (blooms or {}).items():
+        rows_c = (
+            bl.filter(F.col("key_col") == c) if "key_col" in bl.columns else bl
+        )
+        planning = planning.unionByName(
+            rows_c.select(
+                F.lit(3).alias("__tag"),
+                F.col("batch").cast("long").alias("batch"),
+                F.lit(c).alias("file"),
+                F.lit(None).cast("long").alias("n_rows"),
+            )
+        )
+    planning = planning.collect()
     if any(int(r["batch"]) for r in planning if r["__tag"] == 0):
         k.unpersist()
         raise ValueError(
@@ -489,6 +511,10 @@ def erase_rows(
             r["n_rows"]
         )
     affected = sorted(cand_by_batch)
+    summarized: dict[str, set[int]] = {}
+    for r in planning:
+        if r["__tag"] == 3:
+            summarized.setdefault(r["file"], set()).add(int(r["batch"]))
 
     # the pre-erasure manifest rows of every affected batch are
     # metadata-sized (#files-in-affected-batches rows, same class as
@@ -507,11 +533,6 @@ def erase_rows(
     if blooms and affected:
         from .bloom import bloom_candidates
 
-        bad = sorted(set(blooms) - set(cols))
-        if bad:
-            raise ValueError(
-                f"erase_rows: bloom provided for non-key column(s) {bad}"
-            )
         # xxhash64 is type-sensitive: probe with exactly the sink's
         # column types or positions won't match the collected ones
         sink_types = {
@@ -536,6 +557,18 @@ def erase_rows(
                 if bcand is None
                 else bcand.join(j, [*kc, "batch"], "left_semi")
             )
+        # an envelope-admitted batch with NO summary row for a bloomed
+        # column stays affected: a batch whose key column is all NULL
+        # is never an envelope candidate, so a missing row means the
+        # summaries predate the batch (a stale bloom — e.g. a re-read
+        # of the sink served from an older cache entry) and cannot
+        # prune it. Such a batch is never a bloom candidate either, so
+        # its pre-rows are a disjoint union branch.
+        unsummarized = [
+            b
+            for b in affected
+            if any(b not in summarized.get(c, ()) for c in blooms)
+        ]
         # persisted: BOTH union branches below read it (the ok_b rows
         # themselves and the pre-row semi-join's build side) — without
         # the persist each branch would re-run the whole per-column
@@ -546,6 +579,17 @@ def erase_rows(
             .distinct()
             .persist()
         )
+        kept_pre = pre_frame.join(
+            ok_b,
+            pre_frame["batch"].cast("long") == ok_b["__okb"],
+            "left_semi",
+        )
+        if unsummarized:
+            kept_pre = kept_pre.unionByName(
+                pre_frame.filter(
+                    F.col("batch").cast("long").isin(unsummarized)
+                )
+            )
         tagged = (
             ok_b.select(
                 F.lit(0).alias("__tag"),
@@ -554,11 +598,7 @@ def erase_rows(
                   for f in man.schema.fields),
             )
             .unionByName(
-                pre_frame.join(
-                    ok_b,
-                    pre_frame["batch"].cast("long") == ok_b["__okb"],
-                    "left_semi",
-                ).select(
+                kept_pre.select(
                     F.lit(1).alias("__tag"),
                     F.lit(None).cast("long").alias("__okb"),
                     *man.columns,
@@ -569,7 +609,7 @@ def erase_rows(
         ok_b.unpersist()  # the collect above materialized every reader
         bloom_ok = {
             int(r["__okb"]) for r in tagged if r["__tag"] == 0
-        }
+        } | set(unsummarized)
         affected = [b for b in affected if b in bloom_ok]
         pre_rows = [
             man_row(*(r[c] for c in man.columns))

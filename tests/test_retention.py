@@ -455,6 +455,64 @@ def test_erase_with_bloom_prunes_random_layout(spark, tmp_path):
         )
 
 
+def test_erase_keeps_batch_missing_from_stale_bloom(spark, tmp_path):
+    """A bloom frame cached before an append, then "refreshed" by
+    re-collecting and caching again, is still the old cache entry: the
+    re-read of the same path has ``sameResult`` with it, so the second
+    ``.cache()`` is a no-op and the summaries cover batches 1-3 only.
+    The appended batch 4 is envelope-admitted but has no summary row;
+    it must stay affected, so its customer's row is erased."""
+    from superstore_data_pipeline_analytics_dashboard__spark.sources import (
+        bloom as B,
+    )
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.manifest import (
+        collect_file_stats,
+    )
+
+    sink, man = str(tmp_path / "sink"), str(tmp_path / "man")
+
+    def land(batch, customers):
+        rows = [(c, i) for i, c in enumerate(customers)]
+        spark.createDataFrame(rows, "CustomerID STRING, line BIGINT").coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{sink}/batch={batch}")
+        (
+            collect_file_stats(spark, f"{sink}/batch={batch}", ["CustomerID"])
+            .withColumn("batch", F.lit(batch))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch")
+            .parquet(man)
+        )
+
+    for b in (1, 2, 3):
+        land(b, [f"C{b}{i:02d}" for i in range(20)])
+    spark.catalog.clearCache()
+    old = B.collect_batch_blooms(spark, sink, "CustomerID", n_bits=1 << 12).cache()
+    old.count()
+    land(4, ["C400", "C999", "C401"])
+    blooms = B.collect_batch_blooms(
+        spark, sink, "CustomerID", n_bits=1 << 12
+    ).cache()
+    # the trap this test replays: the re-collected frame is served
+    # from the pre-append entry
+    assert sorted(r["batch"] for r in blooms.collect()) == [1, 2, 3]
+
+    rep = {
+        r["batch"]: r
+        for r in R.erase_rows(
+            spark, sink, man, "CustomerID",
+            spark.createDataFrame([("C999",)], "CustomerID STRING"),
+            blooms={"CustomerID": blooms},
+        ).collect()
+    }
+    assert rep[4]["rewritten"] and rep[4]["rows_erased"] == 1
+    left = spark.read.parquet(sink)
+    assert left.filter(F.col("CustomerID") == "C999").count() == 0
+    assert left.count() == 3 * 20 + 2
+    old.unpersist()
+
+
 def test_erasure_property_vs_bruteforce(spark, tmp_path):
     """Property: on arbitrary batch layouts (overlapping envelopes
     included) and arbitrary opt-out sets, erasure equals the Python
